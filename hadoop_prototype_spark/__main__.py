@@ -191,15 +191,6 @@ def cmd_streamjob(spark, a) -> dict:
     return {"command": "streamjob", "output": a.output}
 
 
-def cmd_compact(spark, a) -> dict:
-    """Bin-pack undersized parquet files in place (incremental OPTIMIZE;
-    right-sized files stay untouched bytes)."""
-    from .sources.compact import compact
-
-    stats = compact(spark, a.input, target_bytes=a.target_bytes)
-    return {"command": "compact", "input": a.input, **stats}
-
-
 def cmd_ingest(spark, a) -> dict:
     """Run the streaming corpus-ingest pipeline (streaming/ingest.py) over
     a directory of document parquet files, availableNow: quality filter →
@@ -716,15 +707,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("-numReduceTasks", dest="num_reduce_tasks", type=int, default=None)
     sp.add_argument("--compress", choices=["gzip", "bzip2", "lz4", "snappy", "deflate"])
     sp.set_defaults(fn=cmd_streamjob)
-
-    sp = sub.add_parser(
-        "compact", help="bin-pack undersized parquet files (incremental OPTIMIZE)"
-    )
-    sp.add_argument("-input", dest="input", required=True)
-    sp.add_argument(
-        "--target-bytes", dest="target_bytes", type=int, default=128 * 1024 * 1024
-    )
-    sp.set_defaults(fn=cmd_compact)
 
     sp = sub.add_parser(
         "corpusprep", help="quality->dedup->sample->split->decontam->pack over documents parquet"

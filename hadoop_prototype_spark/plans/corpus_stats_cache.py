@@ -10,9 +10,9 @@ driver fixture ships no stats sidecar and its directory is read-only), and
 every later query build reads a few-KB parquet instead of scanning the
 corpus.
 
-Staleness safety follows sources/manifest.py's convention: the cache key
-is a fingerprint of the documents table's file listing (name, size,
-mtime) — an out-of-band rewrite of the corpus changes the fingerprint, so
+Staleness safety: the cache key is a fingerprint of the documents
+table's file listing (name, size, mtime) — an out-of-band rewrite of the
+corpus changes the fingerprint, so
 a query can never consume stats for data it isn't reading; the stale entry
 is simply recomputed under the new key (self-healing, no invalidation
 protocol).

@@ -138,7 +138,7 @@ def get_spark(
         # write timestamps as TIMESTAMP_MICROS, not the legacy INT96:
         # INT96 columns carry NO parquet min/max statistics, which would
         # blind every footer-stats consumer (snapshot partition specs on
-        # timestamp columns, manifest pruning, zorder stats)
+        # timestamp columns, snapshot-log pruning, zorder stats)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # bucketed tables (CompositeInputFormat-style co-located joins) need
         # a catalog warehouse; keep it off the repo tree

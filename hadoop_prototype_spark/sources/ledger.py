@@ -14,8 +14,7 @@ caller invokes AFTER its processing lands durably. A crash between
 processing and commit reprocesses the batch (at-least-once, the right
 default for idempotent writes); the ledger file itself swaps via
 write-new-then-rename so a crash mid-commit can never leave a torn
-ledger (sources/merge.py's transactional caveat does not apply — the
-swap is a single rename).
+ledger (the swap is a single rename).
 
 Scale note: the listing and ledger are file-count-sized (metadata, not
 data); the anti-join runs driver-side over names only. The returned

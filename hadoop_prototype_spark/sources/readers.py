@@ -330,10 +330,10 @@ def records_per_partition(df: DataFrame, n: int, total: int | None = None) -> Da
     expensive per-record work).
 
     The required total row count is resolved cheapest-first: an explicit
-    ``total`` (e.g. manifest.table_row_count — zero IO), else — when the
-    frame is a BARE parquet relation, no filters that could change the
-    count — a metadata-only sum of footer num_rows (no data pages read),
-    else a real count. Use only when the downstream cost per record
+    ``total`` (e.g. a snapshot table's ``describe(path)["n_rows"]`` — zero
+    IO), else — when the frame is a BARE parquet relation, no filters that
+    could change the count — a metadata-only sum of footer num_rows (no
+    data pages read), else a real count. Use only when the downstream cost per record
     dwarfs that."""
     if total is None:
         total = _bare_parquet_row_count(df)

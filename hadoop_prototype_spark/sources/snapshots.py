@@ -1,6 +1,6 @@
 """Snapshot isolation + time travel for copy-on-write parquet tables —
-the transaction-log layer merge.py's docstring defers ("a real deployment
-wraps the swap in a transaction log"). Engine extension; the lakehouse
+the engine's one table-write path (MERGE, DELETE, append, OPTIMIZE all
+commit through the log below). Engine extension; the lakehouse
 counterpart of the reference's HDFS-rename commit discipline
 (FileOutputCommitter's rename-into-place, mapreduce/lib/output/
 FileOutputCommitter.java:61), promoted from task level to table level.
@@ -24,9 +24,9 @@ of version N, each file carrying (num_rows, key min/max) — so:
   ConflictError to retry against the new snapshot;
 - **stats live in the log** (Delta's add-file stats): each NEW file gets
   one footer read at commit time; carried-forward files keep their
-  recorded stats — zero steady-state footer reads, the manifest.py
-  property, versioned. Merge/delete pruning reuses merge._affected_files
-  over the snapshot's ranges;
+  recorded stats — zero steady-state footer reads (``FOOTER_READS``
+  pins it). Merge/delete prune with ``_affected_files``: a broadcast
+  interval join of the snapshot's key ranges against the batch's keys;
 - **deletes can be merge-on-read** (``delete_from_mor`` — the Delta
   deletion-vector contract): suppressed (file, key) pairs live in small
   sidecar parquets under ``<table>/_dvs/``, referenced per file entry as
@@ -50,8 +50,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import manifest as mf
-from . import merge as mg
 from . import spec_transforms as tf
 
 _SNAP_DIR = "_snapshots"
@@ -274,6 +272,110 @@ def _move_staged_in(path: str, staging: str, version: int) -> list[str]:
     return moved
 
 
+# Incremented on every parquet footer fetch — tests pin "zero footer reads
+# for carried-forward files" against it.
+FOOTER_READS = 0
+
+
+def footer_key_ranges_multi(
+    files: list[str], key_cols: list[str]
+) -> dict[str, list[tuple[str, object, object, int]]]:
+    """(file, min, max, num_rows) per key column, in ONE metadata read per
+    file — how a commit records stats for its NEW files."""
+    global FOOTER_READS
+    import pyarrow.parquet as pq
+
+    out: dict[str, list[tuple[str, object, object, int]]] = {
+        c: [] for c in key_cols
+    }
+    want = set(key_cols)
+    for f in files:
+        FOOTER_READS += 1
+        md = pq.ParquetFile(f).metadata
+        lo: dict[str, object] = {}
+        hi: dict[str, object] = {}
+        for rg in range(md.num_row_groups):
+            rgm = md.row_group(rg)
+            for ci in range(rgm.num_columns):
+                cc = rgm.column(ci)
+                c = cc.path_in_schema
+                if c in want and cc.statistics is not None:
+                    s = cc.statistics
+                    lo[c] = s.min if c not in lo else min(lo[c], s.min)
+                    hi[c] = s.max if c not in hi else max(hi[c], s.max)
+        for c in key_cols:
+            out[c].append((f, lo.get(c), hi.get(c), md.num_rows))
+    return out
+
+
+def _affected_files(
+    spark: SparkSession,
+    ranges: list[tuple[str, object, object, int]],
+    key_batch: DataFrame,
+    key_col: str,
+) -> list[str]:
+    """Files whose key-range can contain one of the batch's keys.
+
+    The ranges frame gets an EXPLICIT schema (file + the key column's own
+    type): files written without statistics yield all-None bounds, which
+    schema inference would reject; with the typed schema they simply never
+    match and such files are conservatively selected below."""
+    key_type = key_batch.schema[key_col].dataType.simpleString()
+    # a zero-row file (committers write them for empty partitions) has no
+    # stats AND no rows — it can never be affected; a statless file WITH
+    # rows could hold any key, but only a non-empty batch can touch it
+    no_stats = [
+        f for f, lo, hi, n, *_ in ranges if n > 0 and (lo is None or hi is None)
+    ]
+    if no_stats and key_batch.select(key_col).isEmpty():
+        no_stats = []
+    ranged = [
+        (f, lo, hi) for f, lo, hi, *_ in ranges if lo is not None and hi is not None
+    ]
+    ranges_df = spark.createDataFrame(
+        ranged, f"_file string, _lo {key_type}, _hi {key_type}"
+    )
+    # no key-side distinct: the interval join is a broadcast compare, so
+    # deduping only the (tiny) _file output needs ONE exchange instead of
+    # two — the batch-sized distinct shuffle was a whole extra AQE stage
+    # (= an extra Spark job) per verb (r16 opt)
+    hit = [
+        r._file
+        for r in key_batch.select(F.col(key_col).alias("_k"))
+        .join(
+            F.broadcast(ranges_df),
+            (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
+        )
+        .select("_file")
+        .distinct()
+        .collect()
+    ]
+    # a file with no footer stats could hold any key — must be rewritten
+    return sorted(set(hit) | set(no_stats))
+
+
+def apply_upsert(
+    base: DataFrame, upd: DataFrame, cols: list[str], key_col: str
+) -> DataFrame:
+    """The CoW upsert frame: full-outer join on the key, update columns
+    win where present."""
+    u = upd.select(
+        F.col(key_col), *[F.col(c).alias(f"_u_{c}") for c in cols if c != key_col]
+    )
+    return (
+        base.join(u, key_col, "full")
+        .select(
+            key_col,
+            *[
+                F.coalesce(F.col(f"_u_{c}"), F.col(c)).alias(c)
+                for c in cols
+                if c != key_col
+            ],
+        )
+        .select(*cols)
+    )
+
+
 def _file_entries(
     files: list[str], key_col: str, stat_cols: list[str] | None = None,
     transforms: list[tuple[str, "tf.SpecItem", str]] | None = None,
@@ -295,29 +397,29 @@ def _file_entries(
     if not stat_cols and not transforms:
         return [
             {"name": os.path.basename(f), "num_rows": n, "min": lo, "max": hi}
-            for f, lo, hi, n, *_ in mf.footer_key_ranges(files, key_col)
+            for f, lo, hi, n in footer_key_ranges_multi(files, [key_col])[key_col]
         ]
     src_cols = [c for _, it, c in transforms if it.order_preserving]
     cols = [key_col] + [
         c for c in dict.fromkeys([*(stat_cols or []), *src_cols])
         if c != key_col
     ]
-    multi = mf.footer_key_ranges_multi(files, cols)
+    multi = footer_key_ranges_multi(files, cols)
     by_src = {c: multi[c] for c in cols}
     out = []
-    for i, (f, lo, hi, n, *_) in enumerate(multi[key_col]):
+    for i, (f, lo, hi, n) in enumerate(multi[key_col]):
         fe = {"name": os.path.basename(f), "num_rows": n, "min": lo, "max": hi}
         st = {}
         for c in (stat_cols or []):
             if c == key_col:
                 continue
-            _, clo, chi, *_rest = by_src[c][i]
+            _, clo, chi, _ = by_src[c][i]
             if clo is not None:
                 st[c] = [clo, chi]
         for sk, it, c in transforms:
             if not it.order_preserving:
                 continue
-            _, clo, chi, *_rest = by_src[c][i]
+            _, clo, chi, _ = by_src[c][i]
             if clo is not None:
                 st[sk] = [it.transform_py(clo), it.transform_py(chi)]
         if st:
@@ -1739,22 +1841,10 @@ def append_table_retrying(
     """append_table with the optimistic-concurrency retry loop; re-checks
     the txn marker each attempt so losing a race to a replayed twin of
     the SAME batch ends in a skip, not a duplicate append."""
-
-    def attempt() -> dict:
-        if txn is not None:
-            v = find_txn(path, txn["app"], txn["batch"])
-            if v is not None:
-                base = _read_entry(path, v)
-                return {
-                    "version": v,
-                    "files_rewritten": 0,
-                    "files_total": len(base["files"]),
-                    "rows_after": _live_rows(base["files"]),
-                    "skipped_as_duplicate_txn": True,
-                }
-        return append_table(spark, path, rows, key_col, txn=txn)
-
-    return _with_conflict_retry(attempt, max_retries)
+    return _with_conflict_retry(
+        lambda: append_table(spark, path, rows, key_col, txn=txn),
+        max_retries, path, txn,
+    )
 
 
 def restore_table(path: str, to_version: int) -> dict:
@@ -1853,7 +1943,7 @@ def merge_into(
     probe = updates.select(key_col)
     if delete_keys is not None:
         probe = probe.unionByName(delete_keys.select(key_col))
-    affected = set(mg._affected_files(spark, ranges, probe, key_col))
+    affected = set(_affected_files(spark, ranges, probe, key_col))
     cols = [f.name for f in _logical_schema(spark, path, base).fields]
     if merge_schema:
         upd_types = {f.name: f.dataType for f in updates.schema.fields}
@@ -1901,7 +1991,7 @@ def merge_into(
             kept = kept.join(
                 delete_keys.select(key_col).distinct(), key_col, "left_anti"
             )
-        merged = mg.apply_upsert(kept, upd, cols, key_col)
+        merged = apply_upsert(kept, upd, cols, key_col)
     else:
         merged = upd
     staging = os.path.join(path, f"_snap_staging-{uuid.uuid4().hex}")
@@ -1928,7 +2018,7 @@ def delete_from(
     if base["key_col"] != key_col:
         raise ValueError(f"table is keyed on {base['key_col']!r}, not {key_col!r}")
     ranges = _ranges(path, base)
-    affected = set(mg._affected_files(spark, ranges, delete_keys, key_col))
+    affected = set(_affected_files(spark, ranges, delete_keys, key_col))
     if not affected:
         # nothing can match: commit nothing, the current version IS the result
         return {
@@ -1988,7 +2078,7 @@ def delete_from_mor(
     if base["key_col"] != key_col:
         raise ValueError(f"table is keyed on {base['key_col']!r}, not {key_col!r}")
     ranges = _ranges(path, base)
-    affected = set(mg._affected_files(spark, ranges, delete_keys, key_col))
+    affected = set(_affected_files(spark, ranges, delete_keys, key_col))
     noop = {
         "version": base["version"],
         "files_rewritten": 0,
@@ -2128,24 +2218,10 @@ def delete_from_mor_retrying(
 ) -> dict:
     """delete_from_mor with the optimistic-concurrency retry loop (and the
     txn replay-skip, for at-least-once callers)."""
-
-    def attempt() -> dict:
-        if txn is not None:
-            v = find_txn(path, txn["app"], txn["batch"])
-            if v is not None:
-                base = _read_entry(path, v)
-                return {
-                    "version": v,
-                    "files_rewritten": 0,
-                    "dv_files_added": 0,
-                    "files_total": len(base["files"]),
-                    "rows_deleted": 0,
-                    "rows_after": _live_rows(base["files"]),
-                    "skipped_as_duplicate_txn": True,
-                }
-        return delete_from_mor(spark, path, delete_keys, key_col, txn=txn)
-
-    return _with_conflict_retry(attempt, max_retries)
+    return _with_conflict_retry(
+        lambda: delete_from_mor(spark, path, delete_keys, key_col, txn=txn),
+        max_retries, path, txn, ("dv_files_added", "rows_deleted"),
+    )
 
 
 def changed_files(
@@ -2441,9 +2517,30 @@ def vacuum(
     return out
 
 
-def _with_conflict_retry(fn, max_retries: int) -> dict:
+def _with_conflict_retry(
+    fn, max_retries: int, path: str | None = None, txn: dict | None = None,
+    zero_keys: tuple[str, ...] = (),
+) -> dict:
+    """Run ``fn`` until it commits, re-running it on a lost version race.
+
+    With ``txn``, each attempt first checks the log for the marker: a
+    replayed twin of the SAME batch that already committed ends the loop
+    in a skip report (``zero_keys`` name the verb's extra counters, all
+    0) instead of a duplicate apply."""
     last: ConflictError | None = None
     for _ in range(max_retries + 1):
+        if txn is not None:
+            v = find_txn(path, txn["app"], txn["batch"])
+            if v is not None:
+                files = _read_entry(path, v)["files"]
+                return {
+                    "version": v,
+                    "files_rewritten": 0,
+                    "files_total": len(files),
+                    "rows_after": _live_rows(files),
+                    **dict.fromkeys(zero_keys, 0),
+                    "skipped_as_duplicate_txn": True,
+                }
         try:
             return fn()
         except ConflictError as e:
@@ -2471,36 +2568,11 @@ def merge_into_retrying(
     writers touch disjoint keys, and last-writer-wins per key otherwise.
     With ``txn``, a retry that discovers the marker already committed (a
     replayed twin won) skips instead of double-applying."""
-
-    def attempt() -> dict:
-        if txn is not None:
-            v = find_txn(path, txn["app"], txn["batch"])
-            if v is not None:
-                base = _read_entry(path, v)
-                return {
-                    "version": v,
-                    "files_rewritten": 0,
-                    "files_total": len(base["files"]),
-                    "rows_after": _live_rows(base["files"]),
-                    "skipped_as_duplicate_txn": True,
-                }
-        return merge_into(
-            spark, path, updates, key_col, txn=txn, merge_schema=merge_schema
-        )
-
-    return _with_conflict_retry(attempt, max_retries)
-
-
-def delete_from_retrying(
-    spark: SparkSession,
-    path: str,
-    delete_keys: DataFrame,
-    key_col: str,
-    max_retries: int = 10,
-) -> dict:
-    """delete_from with the same optimistic-concurrency retry loop."""
     return _with_conflict_retry(
-        lambda: delete_from(spark, path, delete_keys, key_col), max_retries
+        lambda: merge_into(
+            spark, path, updates, key_col, txn=txn, merge_schema=merge_schema
+        ),
+        max_retries, path, txn,
     )
 
 

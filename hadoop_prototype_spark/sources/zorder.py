@@ -1,4 +1,4 @@
-"""Z-order clustered writes: multi-column data skipping.
+"""Z-order clustering key: multi-column data skipping.
 
 A sort layout prunes scans on the leading sort column only; interleaving
 the bits of several columns (Morton / Z-order curve) gives every written
@@ -10,14 +10,14 @@ the one sorted key only — SURVEY.md §1.3).
 
 Shape: the min/max bounds per column are a bounded driver pre-pass (two
 scalars per column, like the total-order sort's boundary sample); the
-z-value is a pure codegen expression over those literal bounds; the
-write is repartitionByRange(z) + sortWithinPartitions(z) — one range
-shuffle, the same cost as a plain sorted write.
+z-value is a pure codegen expression over those literal bounds, which
+``snapshots.optimize(zorder_by=...)`` range-partitions and sorts on — one
+range shuffle, the same cost as a plain sorted write.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ZBITS = 16  # rank-space bits per column; 2 cols × 16 bits = 32-bit z-values
@@ -39,39 +39,3 @@ def _zvalue_expr(cols: list[str], bounds: dict[str, tuple[float, float]], bits: 
         for b in range(bits):
             terms.append(f"shiftleft(shiftright({scaled}, {b}) & 1, {b * n + i})")
     return F.expr(" + ".join(terms))
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 16,
-    bits: int = ZBITS,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order curve of ``cols``."""
-    bounds = {}
-    row = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"lo_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    for c in cols:
-        bounds[c] = (float(row[f"lo_{c}"]), float(row[f"hi_{c}"]))
-    z = _zvalue_expr(cols, bounds, bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    # persist per-column manifests at write time (one footer pass for all
-    # columns): downstream merge/delete/row-count calls never bootstrap
-    import glob as _glob
-    import os as _os
-
-    from . import manifest as _mf
-
-    files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-    for c, entries in _mf.footer_key_ranges_multi(files, cols).items():
-        _mf.write_manifest(path, c, entries)

@@ -209,26 +209,6 @@ def test_cli_corpusprep_strip_boilerplate(spark, sf_dir, tmp_path, capsys):
     assert train_tokens < kept_orig <= orig_tokens
 
 
-def test_cli_compact(spark, tmp_path, capsys):
-    import glob
-    import json
-
-    from hadoop_prototype_spark.__main__ import main
-
-    base = str(tmp_path / "tbl")
-    for i in range(8):
-        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(base)
-    before = len(glob.glob(f"{base}/*.parquet"))
-    rc = main(
-        ["compact", "-input", base, "--target-bytes", str(10 * 1024 * 1024)],
-        spark=spark,
-    )
-    assert rc == 0
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["files_after"] < before
-    assert spark.read.parquet(base).count() == 80
-
-
 def test_cli_explain(spark, sf_dir, capsys):
     """`explain` prints a registered query's physical plan and reports
     scan/exchange counts; unknown names fail with close matches."""
@@ -356,13 +336,16 @@ def test_cli_corpusprep_token_budget(spark, sf_dir, tmp_path, capsys):
 def test_cli_snapshot_maintenance(spark, tmp_path, capsys):
     """snapshot optimize/vacuum/history verbs drive sources/snapshots.py:
     optimize compacts the tiny-merge tail into a new version, history
-    shows the log, vacuum (retention 0, no live writers) reclaims."""
+    shows the log, vacuum (retention 0, no live writers) reclaims. There
+    is no log-less top-level ``compact`` command."""
     import json
 
     from hadoop_prototype_spark.__main__ import main
     from hadoop_prototype_spark.sources import snapshots as sn
 
     path = str(tmp_path / "t")
+    with pytest.raises(SystemExit):
+        main(["compact", "-input", path], spark=spark)
     sn.create_table(
         spark.range(500).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(2, "k"),
         path,

@@ -279,17 +279,13 @@ def test_quality_tiers_degenerate(spark):
 
 def test_delete_from_empty_target_and_bpe_special_tokens(spark, tmp_path):
     from hadoop_prototype_spark.operators.textstats import bpe_apply
-    from hadoop_prototype_spark.sources.merge import delete_from
+    from hadoop_prototype_spark.sources import snapshots as sn
 
-    # empty/nonexistent target: graceful zero-stats, no schema-inference crash
+    # nonexistent target: a clear "no such snapshot" error, not a
+    # schema-inference crash
     keys = spark.createDataFrame([(1,)], "o_orderkey long")
-    stats = delete_from(spark, str(tmp_path / "nowhere"), keys, "o_orderkey")
-    assert stats == {
-        "files_total": 0,
-        "files_rewritten": 0,
-        "rows_deleted": 0,
-        "rows_after": 0,
-    }
+    with pytest.raises(FileNotFoundError):
+        sn.delete_from(spark, str(tmp_path / "nowhere"), keys, "o_orderkey")
 
     # BPE merge literals survive backslashes and quotes in tokens
     docs = spark.createDataFrame(

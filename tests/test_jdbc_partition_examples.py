@@ -17,7 +17,11 @@ from hadoop_prototype_spark.operators.partition import (
     range_partition,
     salt_keys,
 )
-from hadoop_prototype_spark.plans.examples import compact, copy_dataset, logalyzer
+from hadoop_prototype_spark.plans.examples import (
+    compact,
+    copy_dataset,
+    logalyzer,
+)
 from hadoop_prototype_spark.sources.jdbc import (
     boolean_split_predicates,
     data_driven_predicates,

@@ -406,7 +406,10 @@ def test_incremental_aggregate_maintenance(spark, sf_dir):
     deltas for sums/counts)."""
     from pyspark.sql import functions as F
 
-    from hadoop_prototype_spark.operators.incremental import merge_aggregates, summarize
+    from hadoop_prototype_spark.operators.incremental import (
+        merge_aggregates,
+        summarize,
+    )
     from hadoop_prototype_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(

@@ -223,7 +223,11 @@ def test_stream_read_change_feed_matches_batch_cdc(spark, tmp_path):
     sn.delete_from_mor(
         spark, path, spark.range(5, 7).select(F.col("id").alias("k")), "k"
     )
-    sn.optimize(spark, path)
+    # a target above every file's row count makes EVERY file a victim,
+    # whatever the core count split the writes into
+    rep = sn.optimize(spark, path, target_file_rows=100)
+    assert rep["files_rewritten"] >= 2
+    opt_v = rep["version"]
     sn.append_table(spark, path, _rows(spark, 13, 14), "k")
     latest = sn.current_version(path)
 
@@ -250,7 +254,6 @@ def test_stream_read_change_feed_matches_batch_cdc(spark, tmp_path):
     ]
     assert sorted(rows) == sorted(expected)
     # the optimize version contributed nothing (pure rewrite cancels)
-    opt_v = latest - 1
     assert not [r for r in rows if r[3] == opt_v]
     # spot-check the classification itself
     by_change = {}

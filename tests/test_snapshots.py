@@ -10,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_prototype_spark.sources import manifest as mf
 from hadoop_prototype_spark.sources import snapshots as sn
 
 
@@ -55,13 +54,66 @@ def test_steady_state_merge_reads_footers_only_for_new_files(spark, tmp_path):
     path = str(tmp_path / "t")
     sn.create_table(_table(spark), path, "k")
     upd = spark.createDataFrame([(3, -3)], "k bigint, v bigint")
-    before = mf.FOOTER_READS
+    before = sn.FOOTER_READS
     r = sn.merge_into(spark, path, upd, "k")
     new_files = len(sn._read_entry(path, r["version"])["files"]) - (
         r["files_total"] - r["files_rewritten"]
     )
     # pruning used the log's recorded stats: footer reads = new files only
-    assert mf.FOOTER_READS - before == new_files
+    assert sn.FOOTER_READS - before == new_files
+
+
+def test_steady_state_merge_does_zero_old_file_footer_reads(spark, tmp_path):
+    """create_table pays the one footer pass (its stats go into the log);
+    every later merge/delete prunes against the log and footer-reads ONLY
+    its own newly written files."""
+    path = str(tmp_path / "t")
+    before = sn.FOOTER_READS
+    sn.create_table(_table(spark, n=4000, parts=40), path, "k")
+    n_files = len(sn._read_entry(path, 1)["files"])
+    assert sn.FOOTER_READS - before >= n_files  # the one-time pass
+
+    sn.merge_into(
+        spark, path, spark.createDataFrame([(5, -1), (6, -1)], "k bigint, v bigint"), "k"
+    )
+    before = sn.FOOTER_READS
+    stats = sn.merge_into(
+        spark, path, spark.createDataFrame([(7, -2)], "k bigint, v bigint"), "k"
+    )
+    added = stats["files_rewritten"]  # each rewritten slice re-lands as new files
+    steady_reads = sn.FOOTER_READS - before
+    # only the freshly written files get footer-read; 40 old files: zero
+    assert steady_reads <= max(1, added) + 2, (steady_reads, added)
+    assert steady_reads < n_files / 2
+
+    before = sn.FOOTER_READS
+    sn.delete_from(spark, path, spark.createDataFrame([(8,)], "k bigint"), "k")
+    assert sn.FOOTER_READS - before < n_files / 2
+
+
+def test_steady_state_merge_at_1000_files(spark, tmp_path, parts=1000):
+    """At the file count the claim is made for: a merge into a
+    ``parts``-file table footer-reads ONLY its own newly written files —
+    none of the old ones — and runs in seconds."""
+    import time
+
+    path = str(tmp_path / "t")
+    sn.create_table(_table(spark, n=200_000, parts=parts), path, "k")
+    assert len(sn._read_entry(path, 1)["files"]) >= parts
+    # one in-range update + one true insert (1M > every file's range)
+    upd = spark.createDataFrame([(5, -1), (1_000_000, -2)], "k bigint, v bigint")
+    t0 = time.perf_counter()
+    before = sn.FOOTER_READS
+    r = sn.merge_into(spark, path, upd, "k")
+    wall = time.perf_counter() - t0
+    new_files = len(sn._read_entry(path, r["version"])["files"]) - (
+        r["files_total"] - r["files_rewritten"]
+    )
+    # pruning used the log's recorded stats: footer reads = new files only
+    assert sn.FOOTER_READS - before == new_files
+    assert r["files_rewritten"] <= 4  # pruning actually pruned
+    assert r["rows_after"] == 200_001
+    assert wall < 60, f"{parts}-file steady-state merge took {wall:.1f}s"
 
 
 def test_commit_is_first_writer_wins(spark, tmp_path):
@@ -213,17 +265,18 @@ def test_cdc_feed_maintains_a_materialized_rollup(spark, tmp_path):
 
 
 def test_matches_unversioned_merge_semantics(spark, tmp_path):
-    """The versioned upsert is the same merge as merge.merge_into."""
-    from hadoop_prototype_spark.sources import merge as mg
-
-    plain = str(tmp_path / "plain")
-    _table(spark, n=500, parts=4).write.parquet(plain)
+    """The versioned upsert equals a plain dict model of an upsert: the
+    update's value wins per key, unmatched keys insert, every other key
+    keeps its value — across consecutive merges."""
     snap = str(tmp_path / "snap")
     sn.create_table(_table(spark, n=500, parts=4), snap, "k")
-    upd = spark.createDataFrame([(10, -1), (499, -2), (700, -3)], "k bigint, v bigint")
-    mg.merge_into(spark, plain, upd, "k")
-    sn.merge_into(spark, snap, upd, "k")
-    assert _rows(spark.read.parquet(plain)) == _rows(sn.read_table(spark, snap))
+    model = {k: k * 10 for k in range(500)}
+    for batch in ([(10, -1), (499, -2), (700, -3)], [(700, -4), (0, -5), (800, -6)]):
+        model.update(batch)
+        sn.merge_into(
+            spark, snap, spark.createDataFrame(batch, "k bigint, v bigint"), "k"
+        )
+        assert _rows(sn.read_table(spark, snap)) == sorted(model.items())
 
 
 def test_concurrent_writers_all_land_with_retry(spark, tmp_path):

@@ -19,12 +19,14 @@ from hadoop_prototype_spark.plans.jobcontrol import ControlledJob, JobControl, S
 from hadoop_prototype_spark.sources.filters import md5_filter, regex_filter
 from hadoop_prototype_spark.sources.generators import random_text, record_checksum, teragen
 from hadoop_prototype_spark.sources.readers import (
+    _bare_parquet_row_count,
     multiple_inputs,
     parse_kv,
     read_fixed_length,
     read_kv_text,
     read_sequence_file,
     read_text,
+    records_per_partition,
 )
 
 
@@ -490,30 +492,35 @@ def test_provided_storage_mount(spark, tmp_path):
     assert spark.read.parquet(ext).count() == 100
 
 
-def test_zorder_write_prunes_on_both_columns(spark, sf_dir, tmp_path):
-    """Z-order layout: file-level min/max envelopes must prune probes on
-    the SECOND clustered column, which a linear sort cannot (every file
-    spans the full secondary range)."""
+def test_zorder_optimize_prunes_on_both_columns(spark, sf_dir, tmp_path):
+    """Z-order layout (``optimize(zorder_by=...)``): file-level min/max
+    envelopes must prune probes on the SECOND clustered column, which a
+    linear sort cannot (every file spans the full secondary range)."""
+    import math
+
     import pyarrow.parquet as pq
 
+    from hadoop_prototype_spark.sources import snapshots as sn
     from hadoop_prototype_spark.sources.tables import load_table
-    from hadoop_prototype_spark.sources.zorder import zorder_write
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     zdir, ldir = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    zorder_write(li, zdir, ["l_orderkey", "l_partkey"], num_files=16)
-    (
-        li.repartitionByRange(16, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite")
-        .parquet(ldir)
+    linear = li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
+        "l_orderkey"
+    )
+    sn.create_table(linear, ldir, "l_orderkey")
+    sn.create_table(linear, zdir, "l_orderkey")
+    sn.optimize(
+        spark, zdir, target_file_rows=math.ceil(li.count() / 16),
+        zorder_by=["l_orderkey", "l_partkey"],
     )
 
     def matching_files(d, col, probes):
-        import glob
-
+        # the live version's files only: the pre-optimize files stay on
+        # disk (for time travel) until vacuum
+        entry = sn._read_entry(d, sn.current_version(d))
         total = 0
-        files = sorted(glob.glob(d + "/*.parquet"))
+        files = [os.path.join(d, fe["name"]) for fe in entry["files"]]
         assert len(files) >= 8, "need multiple files for a pruning comparison"
         for v in probes:
             for f in files:
@@ -540,22 +547,23 @@ def test_zorder_write_prunes_on_both_columns(spark, sf_dir, tmp_path):
 
 def test_merge_into_rewrites_only_affected_files(spark, sf_dir, tmp_path):
     """Copy-on-write MERGE: an update batch touching a narrow key band must
-    rewrite only the files whose footer key-range intersects it, and the
+    rewrite only the files whose recorded key-range intersects it, and the
     merged table must equal apply-updates-then-insert semantics."""
     from pyspark.sql import functions as F
 
-    from hadoop_prototype_spark.sources.merge import merge_into
+    from hadoop_prototype_spark.sources import snapshots as sn
     from hadoop_prototype_spark.sources.tables import load_table
 
     target = str(tmp_path / "orders_cow")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    (
-        orders.repartitionByRange(16, "o_orderkey")
-        .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite")
-        .parquet(target)
+    sn.create_table(
+        orders.repartitionByRange(16, "o_orderkey").sortWithinPartitions(
+            "o_orderkey"
+        ),
+        target,
+        "o_orderkey",
     )
     n0 = orders.count()
     lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
@@ -571,13 +579,13 @@ def test_merge_into_rewrites_only_affected_files(spark, sf_dir, tmp_path):
         "o_orderkey long, o_custkey long, o_totalprice double",
     )
     n_upd = updates.count()
-    stats = merge_into(spark, target, updates.union(inserts), "o_orderkey")
+    stats = sn.merge_into(spark, target, updates.union(inserts), "o_orderkey")
 
     assert stats["files_total"] == 16
     assert 1 <= stats["files_rewritten"] <= 4, stats  # narrow band → few files
     assert stats["rows_after"] == n0 + 5
 
-    after = spark.read.parquet(target)
+    after = sn.read_table(spark, target)
     assert after.filter(F.col("o_totalprice") == -1.0).count() == n_upd
     assert after.filter(F.col("o_orderkey") > hi).count() == 5
     # untouched keys keep their original values
@@ -614,75 +622,58 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 
 def test_merge_into_insert_only_and_empty_batches(spark, tmp_path):
     """MERGE edge cases: an all-inserts batch rewrites zero files; an empty
-    batch is a no-op."""
-    from hadoop_prototype_spark.sources.merge import merge_into
+    batch rewrites nothing and changes no row."""
+    from hadoop_prototype_spark.sources import snapshots as sn
 
     target = str(tmp_path / "t")
-    spark.range(100).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(
-        4, "k"
-    ).sortWithinPartitions("k").write.parquet(target)
+    sn.create_table(
+        spark.range(100).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(
+            4, "k"
+        ).sortWithinPartitions("k"),
+        target,
+        "k",
+    )
 
     inserts = spark.createDataFrame([(1000, 1), (1001, 2)], "k long, v long")
-    stats = merge_into(spark, target, inserts, "k")
+    stats = sn.merge_into(spark, target, inserts, "k")
     assert stats["files_rewritten"] == 0
     assert stats["rows_after"] == 102
 
     empty = spark.createDataFrame([], "k long, v long")
-    stats = merge_into(spark, target, empty, "k")
+    stats = sn.merge_into(spark, target, empty, "k")
     assert stats["files_rewritten"] == 0
     assert stats["rows_after"] == 102
+    assert sn.read_table(spark, target).count() == 102
 
 
-# --- compaction (bin-packing OPTIMIZE) ---------------------------------------
+# --- compaction (snapshot OPTIMIZE) ------------------------------------------
 
 
 def test_compaction_packs_small_files_leaves_big_untouched(spark, tmp_path):
-    """Many tiny files + one right-sized file: compaction must merge the
-    tiny ones into ~target bins, preserve every row, leave the right-sized
-    file as untouched bytes, and be idempotent on re-run."""
-    import glob
-    import os
-
-    from hadoop_prototype_spark.sources.compact import compact
+    """Many tiny files + one right-sized file: ``optimize`` must merge the
+    tiny ones, preserve every row, carry the right-sized file forward
+    unrewritten, and be idempotent on re-run."""
+    from hadoop_prototype_spark.sources import snapshots as sn
 
     base = str(tmp_path / "tbl")
-    # 12 tiny files (one row each)
+    sn.create_table(spark.range(1000, 3000).repartition(1), base, "id")
+    big = sn._read_entry(base, 1)["files"][0]
+    # 12 tiny files (ten rows each)
     for i in range(12):
-        spark.range(i * 10, i * 10 + 10).coalesce(1).write.mode("append").parquet(base)
-    # ensure single-file-per-write: rewrite with repartition(1) appends
-    spark.range(1000, 3000).repartition(1).write.mode("append").parquet(base)
-    before = sorted(glob.glob(os.path.join(base, "*.parquet")))
-    sizes = {f: os.path.getsize(f) for f in before}
-    big = max(sizes, key=sizes.get)
-    total_before = spark.read.parquet(base).count()
+        sn.append_table(spark, base, spark.range(i * 10, i * 10 + 10).coalesce(1), "id")
+    n_before = len(sn._read_entry(base, sn.current_version(base))["files"])
+    assert n_before == 13
 
-    target = int(os.path.getsize(big) * 2)  # big file is right-sized (>= 50%)
-    stats = compact(spark, base, target_bytes=target)
-    assert stats["files_rewritten"] >= 2
-    assert stats["files_after"] < stats["files_before"]
-
-    after = set(glob.glob(os.path.join(base, "*.parquet")))
+    stats = sn.optimize(spark, base)
+    assert stats["files_rewritten"] == 12
+    after = sn._read_entry(base, stats["version"])["files"]
+    assert len(after) < n_before
     assert big in after, "right-sized file must not be rewritten"
-    assert spark.read.parquet(base).count() == total_before
-    got = sorted(r.id for r in spark.read.parquet(base).collect())
+    got = sorted(r.id for r in sn.read_table(spark, base).collect())
     assert got == sorted(list(range(120)) + list(range(1000, 3000)))
 
-    again = compact(spark, base, target_bytes=target)
-    assert again["files_rewritten"] <= stats["files_rewritten"]
-
-
-def test_compaction_bin_plan_respects_target():
-    """First-fit-decreasing must never overfill a bin (beyond one file) and
-    must not split files."""
-    from hadoop_prototype_spark.sources.compact import plan_bins
-
-    small = [(f"f{i}", sz) for i, sz in enumerate([60, 50, 40, 30, 20, 10])]
-    bins = plan_bins(small, target_bytes=100)
-    packed = sorted(f for b in bins for f in b)
-    assert packed == sorted(f for f, _ in small)
-    sizes = dict(small)
-    for b in bins:
-        assert sum(sizes[f] for f in b) <= 100
+    again = sn.optimize(spark, base)
+    assert again["files_rewritten"] == 0 and again["version"] == stats["version"]
 
 
 # --- format matrix (Spark-native formats a migrating user lands on) ----------
@@ -730,18 +721,19 @@ def test_delete_from_rewrites_only_affected_files(spark, sf_dir, tmp_path):
     gone, every other row survives byte-identical semantics."""
     from pyspark.sql import functions as F
 
-    from hadoop_prototype_spark.sources.merge import delete_from
+    from hadoop_prototype_spark.sources import snapshots as sn
     from hadoop_prototype_spark.sources.tables import load_table
 
     target = str(tmp_path / "orders_del")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    (
-        orders.repartitionByRange(16, "o_orderkey")
-        .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite")
-        .parquet(target)
+    sn.create_table(
+        orders.repartitionByRange(16, "o_orderkey").sortWithinPartitions(
+            "o_orderkey"
+        ),
+        target,
+        "o_orderkey",
     )
     n0 = orders.count()
     lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
@@ -749,13 +741,13 @@ def test_delete_from_rewrites_only_affected_files(spark, sf_dir, tmp_path):
     doomed = orders.filter(F.col("o_orderkey") <= band_hi).limit(15).select("o_orderkey")
     n_doomed = doomed.count()
 
-    stats = delete_from(spark, target, doomed, "o_orderkey")
+    stats = sn.delete_from(spark, target, doomed, "o_orderkey")
     assert stats["files_total"] == 16
     assert 1 <= stats["files_rewritten"] <= 4, stats
     assert stats["rows_deleted"] == n_doomed
     assert stats["rows_after"] == n0 - n_doomed
 
-    after = spark.read.parquet(target)
+    after = sn.read_table(spark, target)
     assert after.join(doomed, "o_orderkey", "left_semi").count() == 0
     survivors = orders.join(doomed, "o_orderkey", "left_anti")
     assert (
@@ -765,8 +757,25 @@ def test_delete_from_rewrites_only_affected_files(spark, sf_dir, tmp_path):
 
     # a delete set hitting nothing rewrites nothing
     ghost = spark.createDataFrame([(hi + 999_999,)], "o_orderkey long")
-    stats2 = delete_from(spark, target, ghost, "o_orderkey")
+    stats2 = sn.delete_from(spark, target, ghost, "o_orderkey")
     assert stats2["files_rewritten"] == 0 and stats2["rows_deleted"] == 0
+
+
+def test_records_per_partition_uses_metadata_for_bare_scans(spark, tmp_path):
+    target = str(tmp_path / "t")
+    spark.range(1000).selectExpr("id AS k", "id * 2 AS v").repartitionByRange(
+        4, "k"
+    ).write.parquet(target)
+    scan = spark.read.parquet(target)
+    assert _bare_parquet_row_count(scan) == 1000
+    # a filter changes the count → must NOT use footer sums
+    assert _bare_parquet_row_count(scan.filter(F.col("k") > 10)) is None
+
+    out = records_per_partition(scan, 100)
+    assert out.rdd.getNumPartitions() == 10
+    # an explicit total wins without any IO
+    out2 = records_per_partition(scan, 100, total=1000)
+    assert out2.rdd.getNumPartitions() == 10
 
 
 def test_incremental_file_ledger(spark, sf_dir, tmp_path):
